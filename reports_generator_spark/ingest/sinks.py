@@ -8,6 +8,10 @@ Reference behavior and its two defects we fix:
   partitioned parallel write, single_file is an explicit export option.
 - The already-processed check was a stub (Proof.scala:225-234) → here
   it is a left-anti join on RUTA_DE_REPORTE against the existing sink.
+
+A batch is parsed once for both sinks: `write_parquet_idempotent`
+materializes the rows it appends and returns that materialized frame,
+so `write_csv` writes the same rows without re-reading the input.
 """
 
 from __future__ import annotations
@@ -45,23 +49,37 @@ def write_parquet_idempotent(
 
     First write creates the dataset (the reference's overwrite-first
     probe, Proof.scala:51-53, without the mutable driver flag). Returns
-    the DataFrame of rows actually written.
+    the materialized rows actually written, in ``df``'s column order;
+    pass them to `write_csv` so both sinks get the same rows from one
+    scan and parse of the input.
 
     Scale notes: the processed-key history is unbounded over years of
     appends, so the anti-join carries NO broadcast hint (AQE picks
-    broadcast while it is small, shuffles when it is not), and the key
-    set is eagerly materialized (localCheckpoint) BEFORE the append so
-    the write never scans the directory it is appending to. Any read
-    error other than true absence (schema mismatch, corrupt footer)
-    propagates instead of silently switching to overwrite.
+    broadcast while it is small, shuffles when it is not). The rows to
+    append are the one materialization point: one eager
+    ``localCheckpoint`` of ``fresh`` BEFORE the append, so the write
+    never scans the directory it is appending to, and later writers of
+    the returned frame neither re-read the input nor see files that
+    changed or vanished since. ``localCheckpoint`` rather than
+    ``cache``: a cached frame that loses a block recomputes it from
+    lineage, which after the append re-reads the sink and silently
+    yields no rows; a lost checkpoint block fails the job instead. The
+    blocks live in executor memory spilling to disk (MEMORY_AND_DISK)
+    and Spark's context cleaner frees them once the returned frame is
+    no longer referenced. Any read error other than true absence
+    (schema mismatch, corrupt footer) propagates instead of silently
+    switching to overwrite.
     """
     if dataset_exists(spark, path):
-        existing = spark.read.parquet(path).select(key_col).distinct().localCheckpoint()
-        fresh = df.join(existing, key_col, "left_anti")
+        existing = spark.read.parquet(path).select(key_col).distinct()
+        # the join moves key_col to the front; keep df's order so every
+        # appended CSV file has the first batch's header
+        fresh = df.join(existing, key_col, "left_anti").select(*df.columns)
         mode = "append"
     else:
         fresh = df
         mode = "overwrite"
+    fresh = fresh.localCheckpoint()
     out = fresh.coalesce(1) if single_file else fresh
     out.write.mode(mode).parquet(path)
     return fresh

@@ -17,7 +17,9 @@ story. The modern idiom:
   (`ingest_report_lines`), so batch/stream parity is by construction.
 - The sink append reuses `write_parquet_idempotent` (P13 done right):
   replays after a failure between sink write and checkpoint commit are
-  filtered by the left-anti join on RUTA_DE_REPORTE.
+  filtered by the left-anti join on RUTA_DE_REPORTE. The sink
+  materializes the rows to append (one localCheckpoint) before the
+  write, so the append never reads the directory it writes to.
 
 At scale: the file source lists incrementally (maxFilesPerTrigger
 bounds batch size); parsing is executor-side; the only driver state is

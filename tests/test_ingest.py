@@ -9,7 +9,11 @@ recursive-scan extension filter.
 
 from __future__ import annotations
 
+import csv
+import glob
 import os
+import shutil
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,8 +24,12 @@ from reports_generator_spark.config import (
     MAIN_PROTO_HEADERS,
     ReportConfig,
 )
-from reports_generator_spark.ingest import ingest_reports, write_parquet_idempotent
-from reports_generator_spark.ingest.fixtures import block_values, write_report_files
+from reports_generator_spark.ingest import ingest_reports, write_csv, write_parquet_idempotent
+from reports_generator_spark.ingest.fixtures import (
+    block_values,
+    report_file_name,
+    write_report_files,
+)
 from reports_generator_spark.schemas import typed_view
 
 GEN_DATE = "2026-01-01 00:00:00"
@@ -217,19 +225,125 @@ def test_typed_view(ingested):
     assert r["CABECERAS_IGUALES"] in (True, False)
 
 
-def test_idempotent_parquet_sink(spark, report_dir, tmp_path):
-    cfg = ReportConfig(
-        input_dir=report_dir, output_parquet="", output_csv="", generation_date=GEN_DATE
+def _cfg(landing: str) -> ReportConfig:
+    return ReportConfig(
+        input_dir=landing, output_parquet="", output_csv="", generation_date=GEN_DATE
     )
-    df = ingest_reports(spark, cfg)
-    sink = str(tmp_path / "parquet_sink")
-    first = write_parquet_idempotent(spark, df, sink)
-    assert first.count() == 12
+
+
+def _land(spark, landing, pq, out):
+    """The paper's job over ``landing``: both sinks from one call of the
+    idempotent parquet sink. Returns the rows it appended."""
+    fresh = write_parquet_idempotent(spark, ingest_reports(spark, _cfg(landing)), pq)
+    write_csv(fresh, out)
+    return fresh
+
+
+def _parquet_rows(spark, pq) -> Counter:
+    return Counter(
+        tuple("" if r[h] is None else r[h] for h in ERP_HEADERS)
+        for r in spark.read.parquet(pq).collect()
+    )
+
+
+def _csv_headers(out) -> list[list[str]]:
+    """Header line of every non-empty CSV part file."""
+    headers = []
+    for f in sorted(glob.glob(os.path.join(out, "*.csv"))):
+        with open(f, newline="", encoding="utf-8") as fh:
+            header = next(csv.reader(fh), None)
+        if header is not None:
+            headers.append(header)
+    return headers
+
+
+def _csv_rows(out) -> Counter:
+    """CSV sink rows in ERP_HEADERS order, each part read by its header."""
+    rows = Counter()
+    for f in glob.glob(os.path.join(out, "*.csv")):
+        with open(f, newline="", encoding="utf-8") as fh:
+            for rec in csv.DictReader(fh):
+                rows[tuple(rec[h] for h in ERP_HEADERS)] += 1
+    return rows
+
+
+def test_csv_parts_share_the_erp_header(spark, tmp_path):
+    """CSV files appended by a later batch keep the first batch's
+    column order: the anti-join output is projected back to ERP order."""
+    landing = str(tmp_path / "landing")
+    pq, out = str(tmp_path / "pq"), str(tmp_path / "csv")
+    write_report_files(landing, n_files=3, blocks_per_file=4)
+    assert _land(spark, landing, pq, out).count() == 12
+    write_report_files(os.path.join(landing, "next"), n_files=2, blocks_per_file=3)
+    assert _land(spark, landing, pq, out).count() == 6
+    headers = _csv_headers(out)
+    assert len(headers) >= 2
+    assert all(h == list(ERP_HEADERS) for h in headers)
+
+
+@pytest.mark.parametrize("change", ["rewrite", "delete"])
+@pytest.mark.parametrize("first_write", [True, False], ids=["overwrite", "append"])
+def test_returned_frame_is_the_rows_written(spark, tmp_path, first_write, change):
+    """The CSV sink written from the returned frame holds exactly the
+    rows the parquet sink gained, even when a report is rewritten in
+    place or the landing tree vanishes between the two writes: the
+    rows are scanned and parsed once."""
+    landing = str(tmp_path / "landing")
+    pq, out = str(tmp_path / "pq"), str(tmp_path / "csv")
+    before = Counter()
+    if not first_write:
+        write_report_files(landing, n_files=3, blocks_per_file=4)
+        _land(spark, landing, pq, str(tmp_path / "csv0"))
+        before = _parquet_rows(spark, pq)
+    target = write_report_files(os.path.join(landing, "next"), n_files=2, blocks_per_file=4)[0]
+    fresh = write_parquet_idempotent(spark, ingest_reports(spark, _cfg(landing)), pq)
+    if change == "rewrite":
+        # same path, one block instead of four
+        short = str(tmp_path / "short")
+        write_report_files(short, n_files=1, blocks_per_file=1, nested=False)
+        shutil.copy(os.path.join(short, report_file_name(0)), target)
+    else:
+        shutil.rmtree(landing)
+    write_csv(fresh, out)
+    gained = _parquet_rows(spark, pq) - before
+    assert sum(gained.values()) == 8
+    assert _csv_rows(out) == gained
+
+
+def test_idempotent_parquet_sink(spark, report_dir, tmp_path):
+    sink, out = str(tmp_path / "parquet_sink"), str(tmp_path / "csv_sink")
+    assert _land(spark, report_dir, sink, out).count() == 12
     assert spark.read.parquet(sink).count() == 12
-    # re-ingesting the same reports appends nothing (P13 done right)
-    second = write_parquet_idempotent(spark, df, sink)
-    assert second.count() == 0
+    # re-ingesting the same reports appends nothing to either sink
+    # (P13 done right)
+    assert _land(spark, report_dir, sink, out).count() == 0
     assert spark.read.parquet(sink).count() == 12
+    assert sum(_csv_rows(out).values()) == 12
+
+
+def test_single_file_appends_one_parquet_file(spark, tmp_path):
+    """single_file coalesces only the parquet write: each batch adds
+    exactly one parquet file, and the returned frame keeps the input's
+    partitioning for the CSV write."""
+    landing = str(tmp_path / "landing")
+    pq = str(tmp_path / "pq")
+
+    def land():
+        df = ingest_reports(spark, _cfg(landing)).repartition(3)
+        return write_parquet_idempotent(spark, df, pq, single_file=True)
+
+    def n_files():
+        return len(glob.glob(os.path.join(pq, "*.parquet")))
+
+    write_report_files(landing, n_files=3, blocks_per_file=4)
+    first = land()
+    assert (first.count(), n_files()) == (12, 1)
+    assert first.rdd.getNumPartitions() > 1
+    write_report_files(os.path.join(landing, "next"), n_files=2, blocks_per_file=3)
+    second = land()
+    assert (second.count(), n_files()) == (6, 2)
+    assert second.rdd.getNumPartitions() > 1
+    assert spark.read.parquet(pq).count() == 18
 
 
 def test_quarantine_routes_malformed_blocks(spark, tmp_path):
