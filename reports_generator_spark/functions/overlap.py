@@ -18,15 +18,35 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable
 
+from pyspark import SparkContext
+
+
+def _with_caller_properties(thunk: Callable[[], Any]) -> Callable[[], Any]:
+    """``thunk`` set to run under a copy of the calling thread's Spark
+    local properties (job group, job description, scheduler pool). A
+    pool thread starts with none, so its jobs would lose the caller's
+    group and description."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return thunk
+    props = sc._jsc.sc().getLocalProperties().clone()
+
+    def run():
+        sc._jsc.sc().setLocalProperties(props)
+        return thunk()
+
+    return run
+
 
 def concurrent_values(*thunks: Callable[[], Any], max_workers: int | None = None):
     """Run independent blocking driver actions concurrently; returns
-    their results in argument order. Exceptions propagate (first
+    their results in argument order. Each action's jobs carry the
+    caller's job group and description. Exceptions propagate (first
     failing thunk's exception, as with sequential code)."""
     if len(thunks) == 1:
         return [thunks[0]()]
     with ThreadPoolExecutor(
         max_workers=max_workers or min(4, len(thunks))
     ) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(_with_caller_properties(t)) for t in thunks]
         return [f.result() for f in futures]

@@ -103,7 +103,14 @@ def connected_components(
     # materialize the (possibly expensive) upstream pair generation
     # exactly once — the symmetric union below references it twice, and
     # every round joins against the edge set
-    base = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).localCheckpoint()
+    # a row with a null endpoint is not an edge (the star path's
+    # src != dst filter drops it too); kept, the union-find kernel would
+    # see it as a NaN node
+    base = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .dropna()
+        .localCheckpoint()
+    )
     # graph-sized iteration parallelism (see pagerank_undirected): an
     # inherited wide layout turns every min-label round over a small
     # graph into dozens of near-empty tasks; ~50k endpoints/partition
@@ -113,7 +120,7 @@ def connected_components(
     # checkpointed base instead of the deduped union lets the union,
     # dedup and layout materialize as ONE job below (was three).
     n_edges = base.count()
-    if n_edges <= _CC_LOCAL_EDGE_CAP:
+    if _CC_LOCAL_EDGE_CAP > 0 and n_edges <= _CC_LOCAL_EDGE_CAP:
         # small graph: one union-find job replaces the union+dedup
         # materialization plus one convergence-aggregation job per
         # min-label round (2–6 jobs of pure fixed cost at this size)

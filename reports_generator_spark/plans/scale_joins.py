@@ -1278,6 +1278,8 @@ def agg_pushdown_parquet_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
     try:
+        # a bare V2 read, not load_table: this key shows the reader set
+        # up above answering from footer stats, apart from the resolver
         o = spark.read.parquet(f"{sf_dir}/orders.parquet")
         return o.agg(
             F.count(F.lit(1)).alias("n_rows"),

@@ -307,9 +307,9 @@ def stream_cdc_to_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark = _stream_session(spark)
     from pyspark.sql.types import TimestampNTZType
 
-    from ..sources.tables import normalize_nanos_ts
+    from ..sources.tables import load_table
 
-    ev = normalize_nanos_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = load_table(spark, sf_dir, "events")
     if isinstance(ev.schema["ts"].dataType, TimestampNTZType):
         ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
     ev = ev.select("user_id", "event_type", "ts", "event_id")

@@ -49,7 +49,7 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from ..sources.tables import normalize_nanos_ts
+    from ..sources.tables import normalize_nanos_ts, table_schema
 
     src = f"{sf_dir}/events.parquet"
     tag = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:10]
@@ -59,8 +59,7 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(link):
         os.symlink(os.path.abspath(src), link)
 
-    schema = spark.read.parquet(src).schema
-    raw = spark.readStream.schema(schema).parquet(d)
+    raw = spark.readStream.schema(table_schema(spark, src)).parquet(d)
     out = normalize_nanos_ts(raw)
     # Event-time operators (withWatermark) require TIMESTAMP_LTZ; naive
     # parquet micros infer as TIMESTAMP_NTZ. Under the engine's pinned
@@ -361,10 +360,9 @@ def _stream_events_batchdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch read of events with the same ts normalization the
     streaming source applies (shared by the late-drop fixture
     builder)."""
-    from ..sources.tables import normalize_nanos_ts
+    from ..sources.tables import load_table
 
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = normalize_nanos_ts(raw)
+    out = load_table(spark, sf_dir, "events")
     if isinstance(out.schema["ts"].dataType, TimestampNTZType):
         out = out.withColumn("ts", F.col("ts").cast("timestamp"))
     return out.select("event_id", "user_id", "ts")

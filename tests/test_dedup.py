@@ -212,6 +212,28 @@ def test_cc_local_fast_path_matches_iterative(spark, monkeypatch):
     assert (30, 0) in fast  # chain collapses to min label 0
 
 
+def test_cc_null_endpoints_same_on_every_path(spark, monkeypatch):
+    """A row with a null endpoint is not an edge: the union-find fast
+    path, the min-label loop (forced with cap 0, the documented off
+    switch) and large-star/small-star all drop it and agree."""
+    from reports_generator_spark.operators import graph as G
+
+    edges = [(1, 2), (2, 3), (3, None), (None, 4), (None, None), (5, 6), (7, None)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+
+    def comps(fn):
+        return {(r["node"], r["cluster_id"]) for r in fn(df).collect()}
+
+    fast = comps(G.connected_components)
+    star = comps(G.connected_components_star)
+    monkeypatch.setattr(G, "_CC_LOCAL_EDGE_CAP", 0)
+    monkeypatch.setattr(
+        G, "_cc_union_find_local", lambda _: pytest.fail("cap 0 took the fast path")
+    )
+    iterative = comps(G.connected_components)
+    assert fast == iterative == star == {(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)}
+
+
 def test_pagerank_isolated_pair_and_star(spark):
     """Stationary sanity on known topologies: an isolated edge
     converges to rank 1.0 on both ends; a star's hub outranks its

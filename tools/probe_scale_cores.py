@@ -9,6 +9,9 @@ key is protocol/fixed-cost-bound at this SF.
     SPARK_GRAFT_PROBE_CPUS_HI=32 SPARK_GRAFT_PROBE_CPUS_LO=8 \
     python tools/probe_scale_cores.py KEY [KEY ...]
 
+The result is printed and written to
+``.scratch/probe_scale_cores_c{HI}_c{LO}.json``.
+
 Same hygiene as bench.py: noop sink, settle between keys, warmup
 outside timed sections, q6 sentinel per segment.
 """
@@ -104,7 +107,8 @@ def main() -> None:
         "rows": rows,
     }
     print(json.dumps(out, indent=1))
-    with open(".scratch/probe_scale_cores.json", "w") as fh:
+    os.makedirs(".scratch", exist_ok=True)
+    with open(f".scratch/probe_scale_cores_c{hi}_c{lo}.json", "w") as fh:
         json.dump(out, fh, indent=1)
 
 
