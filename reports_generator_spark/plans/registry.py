@@ -43,237 +43,6 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-#: Keys a prior round's driver already attested (green hash-match row in
-#: CORRECTNESS_r01/r02.json, or — for declared rows-only keys — a recorded
-#: rows-only row).  The driver walks ``queries()`` in registration order
-#: under a bounded 50-entry budget, so keys WITHOUT a recorded row yet —
-#: plus any newly added key — must register first.  Keys in this set are
-#: pushed to the back of the dict; everything else keeps its relative
-#: registration order at the front.
-_ATTESTED_PRIOR_ROUNDS: frozenset[str] = frozenset(
-    {
-        # --- round 1 green (CORRECTNESS_r01.json) ---
-        "q3_shipping_priority", "q5_local_supplier_volume", "q10_returned_items",
-        "subquery_above_avg", "pivot_event_matrix", "agg_statistics",
-        "agg_percentiles", "q7_nation_trade_volume", "q8_market_share",
-        "scan_parquet", "scan_csv_roundtrip", "scan_jsonl_roundtrip",
-        "project", "filter_predicate", "join_inner_equi", "join_left_outer",
-        "join_right_outer", "join_full_outer", "join_semi", "join_anti",
-        "join_broadcast", "join_theta_range", "agg_hash_group", "agg_distinct",
-        "grouping_sets_cube_rollup", "sort_limit_topk",
-        "set_union_intersect_except", "scalar_string_fns", "scalar_date_fns",
-        "scalar_math_fns", "json_extract", "join_skew_salted",
-        "join_bucketed_colocated", "scan_orc_roundtrip", "train_test_split",
-        "histogram_fixed_width", "sql_surface", "agg_argmax_mode",
-        "agg_collect_ordered", "sample_stratified", "data_profile",
-        "window_ranking", "window_analytic", "window_running_agg",
-        "sessionize_events", "window_range_time", "window_distribution",
-        "array_map_fns", "text_tokenize_stats",
-        # --- round 2 green (CORRECTNESS_r02.json) ---
-        "agg_approx_distinct", "asof_join", "corpus_mix_weighted",
-        "decontaminate_ngram", "dedup_cluster_cc", "dedup_exact",
-        "dedup_ngram_jaccard", "doc_chunk_sliding", "embedding_neardup",
-        "embedding_quantize", "funnel_conversion", "fuzzy_join_levenshtein",
-        "merge_upsert", "multimodal_columns", "multimodal_frame_sample",
-        "multimodal_resize", "outlier_zscore", "pack_sequences",
-        "partitioned_sink_roundtrip", "q14_promo_revenue", "q19_bracket_or",
-        "q2_min_cost_supplier", "q4_order_priority", "q6_forecast_revenue",
-        "retention_cohorts", "scd2_intervals", "semantic_dedup",
-        "similarity_topk", "stream_dedup_watermark",
-        "stream_sessionize_stateful", "stream_static_join",
-        "stream_tumbling_agg", "text_bm25", "text_fingerprint",
-        "text_lang_id", "text_quality_score", "text_redact_pii", "text_tfidf",
-        "text_token_count", "time_bucket_rollup", "udaf", "udf_scalar",
-        "udtf_expand",
-        # --- round 2 rows-only recorded (declared no-oracle keys) ---
-        "dedup_near_minhash", "dedup_simhash", "similarity_topk_lsh",
-        "similarity_topk_ivf",
-        # --- round 3 green (CORRECTNESS_r03.json) ---
-        "q9_product_profit", "q11_important_parts", "q12_priority_class",
-        "q13_order_distribution", "q15_top_supplier",
-        "q16_part_supplier_variety", "q17_small_qty_revenue",
-        "q18_large_volume", "q20_promotion_suppliers", "q21_late_shippers",
-        "q22_idle_customers", "agg_approx_percentile", "unpivot_metrics",
-        "sql_lateral_topn", "join_null_safe", "join_range_binned",
-        "agg_correlation", "agg_boolean", "session_window_native",
-        "ngram_topk", "corpus_shuffle_shard", "sample_reservoir_per_key",
-        "corpus_clean_pipeline", "text_gopher_rules", "text_rare_token_stats",
-        "embedding_normalize", "embedding_centroid_per_label",
-        "scan_binaryfile", "stream_stream_join", "time_spine_gapfill",
-        "incremental_rollup_merge", "skyline_pareto", "window_fill_forward",
-        "cumulative_distinct_users", "asof_join_nearest",
-        "interval_merge_islands", "time_weighted_avg", "sketch_rollup_hll",
-        "agg_bitmap_distinct", "sql_recursive_cte", "json_variant_extract",
-        "regexp_extract_all", "map_fns", "dedup_lines_c4",
-        "text_repetition_filter", "q3_shipping_priority",
-        "q5_local_supplier_volume", "q10_returned_items",
-        # round 3 rows-only recorded
-        "embedding_neardup_lsh",
-        # --- round 4 green (CORRECTNESS_r04.json, all 50 hash-match) ---
-        "agg_approx_topk", "agg_bitmap_intersect", "agg_linear_regression",
-        "agg_skew_salted", "anomaly_mad", "backlog_open_orders",
-        "cdc_apply_changes", "cluster_kmeans_lloyd", "data_profile_approx",
-        "dedup_containment", "dedup_corpus_end2end", "dedup_minhash_portable",
-        "eval_classification_metrics", "feature_minmax_scale",
-        "feature_onehot_topk", "feature_quantile_bin", "graph_triangle_count",
-        "join_interval_overlap", "join_scd2_pointintime", "join_spatial_grid",
-        "knn_label_accuracy", "pattern_detect_sequence", "quality_linear_score",
-        "report_ingest", "rfm_segmentation", "sample_class_balanced",
-        "scan_schema_evolution", "scan_xml_roundtrip", "similarity_topk_ivf",
-        "similarity_topk_lsh", "sql_parameterized", "sql_pipe_syntax",
-        "stream_foreachbatch_upsert", "stream_incremental_hll",
-        "stream_report_ingest", "table_diff_audit", "text_entropy_quality",
-        "time_bucket_ohlc", "udf_map_in_arrow", "window_ewma",
-        "window_ratio_to_report", "zorder_cluster",
-        # (dedup_near_minhash, dedup_simhash, dedup_cluster_cc,
-        # dedup_ngram_jaccard, embedding_neardup_lsh, graph_pagerank,
-        # market_basket_pairs, embedding_pca_per_label already listed
-        # above or re-tiered below)
-        # --- round 5 green (CORRECTNESS_r05.json: 48/50 hash-match;
-        #     the 2 fails re-enter the round-6 window below) ---
-        "market_basket_pairs", "pivot_multi_agg", "eval_regression_metrics",
-        "abc_pareto_classification", "gini_coefficient", "hhi_concentration",
-        "benford_first_digit", "anomaly_iqr", "purchase_interarrival_stats",
-        "cohort_ltv_cumulative", "seasonality_dow_index", "join_theta_range",
-        "top_k_with_ties", "histogram_log2", "observe_metrics",
-        "fk_integrity_audit", "scan_csv_malformed_permissive",
-        "table_checksum_blocks", "window_period_over_period",
-        "window_rolling_median", "text_oov_rate", "text_clean_normalize",
-        "text_unigram_lm_perplexity", "bpe_pair_counts", "graph_pagerank",
-        "entity_resolution_blocked", "similarity_topk_lsh",
-        "similarity_topk_ivf", "embedding_pca_per_label",
-        "embedding_matryoshka_energy", "eval_ranking_metrics",
-        "multimodal_dedup_phash", "stream_sliding_window_agg",
-        "calendar_dim_generate", "time_interpolate_linear", "bollinger_bands",
-        "sink_mode_auto", "sql_group_by_all", "sql_agg_filter_clause",
-        "sql_try_cast_safe", "feature_quantile_bin_approx",
-        "kanonymity_audit", "feature_winsorize", "feature_hash_bucket",
-        "feature_robust_scale", "spatial_heatmap_bin",
-        # --- round 6 green (CORRECTNESS_r06.json: 50/50 hash-match) ---
-        "agg_weighted_median", "funnel_window", "text_pmi_cooccurrence",
-        "embedding_quantize", "embedding_normalize",
-        "sql_exists_not_exists", "sql_distinct_on", "sql_qualify_topn",
-        "sql_values_inline_lookup", "set_ops_all", "explode_posexplode",
-        "corpus_url_canonicalize", "feature_target_encode",
-        "attribution_multi_touch", "expectations_audit",
-        "forecast_seasonal_naive", "ab_test_zscore",
-        "sample_weighted_priority", "dp_noisy_counts", "drift_psi",
-        "anomaly_cusum_changepoint", "event_transition_matrix",
-        "dedup_splice_overlap", "timeseries_acf",
-        "anomaly_seasonal_residual", "seasonal_decompose_ma",
-        "rolling_corr_pair", "streak_consecutive_days",
-        "window_reset_cumsum", "survival_kaplan_meier",
-        "interval_allocate_daily", "eval_auc_rank", "eval_calibration_bins",
-        "assoc_rules_lift", "lorenz_curve_deciles", "feature_impute_median",
-        "ldiversity_audit", "chisq_independence",
-        "customer_migration_matrix", "ks_test_two_sample",
-        "mann_whitney_u_test", "bootstrap_ci_mean",
-        "price_elasticity_loglog", "demand_variability_xyz",
-        "revenue_bridge_pvm", "otif_delivery_metrics",
-        "duplicate_payment_audit", "dau_wau_stickiness",
-        "session_path_topk", "fifo_inventory_matching",
-        # --- round 7 green (CORRECTNESS_r07.json: 50/50 hash-match) ---
-        "ab_test_ratio_delta_method", "corpus_kl_divergence",
-        "corpus_source_profile",
-        "diff_in_diff_estimator", "exact_median_histogram_2pass",
-        "funnel_time_to_convert", "graph_degree_distribution",
-        "graph_label_propagation", "inventory_reorder_point",
-        "max_drawdown_monthly", "quantile_sketch_error_audit",
-        "sample_consistent_multitable", "spatial_dbscan_corepoints",
-        "theil_sen_trend", "time_decay_score", "token_fertility_by_lang",
-        "join_bloom_pruned", "join_dpp_partition_pruned",
-        "zorder_pruned_scan",
-        "delete_copy_on_write", "compact_small_files_binpack",
-        "sql_window_clause_named", "sql_order_by_all", "sql_star_except",
-        "sql_is_distinct_from",
-        "anova_oneway_f", "tcloseness_audit", "embedding_bitpack_hamming_topk",
-        "corpus_winnowing_fingerprint", "feature_crossfit_target_encode",
-        "agg_count_min_sketch", "sink_atomic_commit_protocol",
-        "scan_json_multiline", "text_sentence_split_stats",
-        "nested_struct_array_ops", "interval_max_concurrency_sweepline",
-        "sql_pivot_clause", "agg_string_concat_ordered",
-        "corpus_filter_funnel_metrics", "json_schema_infer_audit",
-        "agg_hll_intersect_estimate",
-        "udf_grouped_map_zscore", "scan_csv_gzip_roundtrip",
-        "analyze_table_cbo_stats", "stream_incremental_availablenow",
-        # (dedup_minhash_recall_audit, dedup_incremental_minhash,
-        # graph_bfs_reachability re-entered the round-8 window:
-        # their shingle stage changed spelling that round)
-        # --- round 8 green (CORRECTNESS_r08.json: 50/50 hash-match) ---
-        # 35 round-8 window keys (re-attests already listed above keep
-        # their earlier line; the 15 first-time greens are listed here)
-        "dedup_incremental_minhash", "graph_bfs_reachability",
-        "udtf_table_argument", "stream_watermark_late_drop",
-        "dedup_minhash_recall_audit", "scan_file_zonemap_skipping_audit",
-        "merge_schema_evolution", "join_skew_aqe_adaptive",
-        "scan_time_travel_versions", "scan_incremental_since_snapshot",
-        "vacuum_orphan_files_safe", "bucket_pruned_point_lookup",
-        "scan_partition_layout_evolution", "agg_pushdown_parquet_stats",
-        "corpus_release_end2end",
-        # --- round 9 green (CORRECTNESS_r09.json: 50/50 hash-match) ---
-        # 7 window keys (feature_quantile_bin_approx and scan_binaryfile
-        # were re-windowed re-attests, already listed above); the 5
-        # first-time lakehouse write-path greens are listed here
-        "delete_merge_on_read_dv", "manifest_commit_conflict_detect",
-        "table_changes_cdc_versions", "compact_merge_deletion_vectors",
-        "sink_write_audit_publish",
-        # --- round 10 green (CORRECTNESS_r10.json: 50/50 hash-match) ---
-        # the 34 round-10 window keys (3 were re-attests already listed
-        # above: manifest_commit_conflict_detect,
-        # compact_merge_deletion_vectors, sink_write_audit_publish;
-        # embedding_neardup_lsh / similarity_topk_lsh re-attested after
-        # the Arrow-matmul respelling, listed in earlier rounds)
-        "expire_snapshots_retention", "manifest_checkpoint_compaction",
-        "merge_mor_transactional", "stream_exactly_once_replay",
-        "mv_incremental_maintenance", "scan_hidden_partitioning_transforms",
-        "corpus_pii_scrub", "delete_mor_dv_positional_bitmap",
-        "scan_column_mapping_rename", "scan_time_travel_as_of_timestamp",
-        "tokenizer_bpe_merges", "stream_stream_join_left_outer_watermark",
-        "stream_stream_join_full_outer_watermark", "table_rollback_restore",
-        "scan_branch_tag_refs", "train_logistic_irls",
-        "text_bigram_lm_kneser_ney", "manifest_multi_table_transaction",
-        "manifest_stats_file_pruning",
-        "scan_snapshot_isolation_repeatable_read",
-        "scan_json_schema_drift_rescue",
-        "stream_stream_join_right_outer_watermark",
-        "table_history_metadata_relation", "feature_woe_information_value",
-        "embedding_pq_adc_topk", "sink_wap_branch_publish",
-        "report_ingest_python_datasource",
-        "stream_report_ingest_python_datasource",
-        "sink_report_python_datasource_roundtrip",
-        # --- round 11 green (CORRECTNESS_r11.json: 50/50 hash-match) ---
-        # the 20 round-11 window keys (the connector trio + asof_join /
-        # asof_join_nearest / scan_branch_tag_refs were re-attests already
-        # listed above; the 14 first-time greens are listed here)
-        "report_ingest_pushdown_pruned", "schema_evolution_occ_commit",
-        "stream_session_window_watermark", "tokenizer_unigram_lm_em",
-        "train_naive_bayes_multinomial", "table_shallow_clone_divergence",
-        "schema_evolution_type_widening", "vacuum_clone_reference_safe",
-        "asof_join_tolerance", "stream_cdc_to_scd2",
-        "stream_topk_incremental", "embedding_knn_graph_topk",
-        "sink_report_stream_python_datasource",
-        "embedding_knn_graph_clusters",
-        # --- round 12 green (CORRECTNESS_r12.json: 50/50 hash-match) ---
-        # the 15 round-12 window keys (6 were oracle-text re-attests and
-        # 2 plan-change re-attests already listed above; the 7 first-time
-        # greens are listed here)
-        "embedding_knn_graph_lsh", "tokenizer_wordpiece_merges",
-        "vector_index_incremental", "stream_vector_index_append",
-        "tokenizer_wordpiece_apply", "vector_index_pq_codes",
-        "embedding_knn_graph_incremental",
-        # --- round 13 green (CORRECTNESS_r13.json: 50/50 hash-match) ---
-        # the 50-key round-13 window (43 were plan/oracle-change
-        # re-attests already listed above, incl. the full TPC-H set under
-        # the kernel-refactored LSH code path; the 7 first-time greens
-        # are listed here)
-        "embedding_neardup_incremental", "similarity_topk_ivf_pq",
-        "stream_knn_graph_append", "corpus_tokenize_pack",
-        "tokenizer_bpe_apply", "tokenizer_unigram_apply",
-        "vector_index_rebuild",
-    }
-)
-
-
 #: Keys whose ATTESTATION must (re-)run through the driver's bounded
 #: 50-key window in the CURRENT round (round 14), so they sort FIRST:
 #: every NEW round-14 key, plus any key whose oracle TEXT or plan
@@ -375,16 +144,9 @@ def load_all() -> None:
 
     # Reorder for the driver's bounded attestation window (round 1 cut off
     # at exactly 50 entries): keys added/changed this round first (their
-    # recorded rows are stale or absent), any unattested backlog next,
-    # already-attested keys last.  If the window truncates, it drops keys
-    # that already hold a green row, never one waiting for attestation.
-    def tier(k: str) -> int:
-        if k in _ADDED_THIS_ROUND:
-            return 0
-        if k in _ATTESTED_PRIOR_ROUNDS:
-            return 2
-        return 1
-
-    ordered = sorted(QUERIES.items(), key=lambda kv: tier(kv[0]))
+    # recorded rows are stale or absent), every other key after them in
+    # registration order.  If the window truncates, it drops keys that
+    # already hold a green row, never one waiting for attestation.
+    ordered = sorted(QUERIES.items(), key=lambda kv: kv[0] not in _ADDED_THIS_ROUND)
     QUERIES.clear()
     QUERIES.update(ordered)

@@ -70,6 +70,7 @@ from ..functions import (
     quality_score_col,
     tokens_col,
 )
+from ..functions.overlap import concurrent_values
 from ..sources import load_table
 from .dedup import _INC_BANDS, _INC_NH, _INC_THR
 from .registry import query
@@ -612,16 +613,15 @@ def corpus_release_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # thread pool so each write's task tail back-fills the executors
     # freed by its siblings (guide §2.6 — actions are only sequential
     # because driver code calls them sequentially)
-    from concurrent.futures import ThreadPoolExecutor
+    def _write_all(writes: dict[str, DataFrame]) -> None:
+        def write(name: str, df: DataFrame):
+            return lambda: df.write.mode("overwrite").parquet(os.path.join(base, name))
 
-    def _write(item: tuple[str, DataFrame]) -> None:
-        name, df = item
-        df.write.mode("overwrite").parquet(os.path.join(base, name))
+        concurrent_values(*(write(n, df) for n, df in writes.items()), max_workers=3)
 
     writes = dict(state)
     writes["batch_raw"] = docs.filter(is_batch).select("doc_id", "lang", "text")
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        list(pool.map(_write, writes.items()))
+    _write_all(writes)
     assert atomic_claim(
         os.path.join(base, "manifest-v1.txt"), "\n".join(sorted(state))
     )
@@ -729,8 +729,7 @@ def corpus_release_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("n_tok").cast("long").alias("open_fill"))
         ),
     }
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        list(pool.map(_write, e1_writes.items()))
+    _write_all(e1_writes)
     committed_v, _ = commit_with_conflict_detection(
         base, 1,
         add=["packed_e1", "state_fps_e1", "state_sigs_e1", "cursor_v2"],
@@ -785,21 +784,17 @@ def corpus_release_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only the published pack shards) — run concurrently (§2.6)
     pb_read = audit(spark.read.parquet(os.path.join(base, "packed_base")))
     pe1_read = spark.read.parquet(os.path.join(base, "packed_e1"))
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        pack_eq_f = pool.submit(_multiset_eq, served, tp)
-        keep_eq_f = pool.submit(
-            _multiset_eq, inc["keep"].select("doc_id"), twin["keep"].select("doc_id")
-        )
-        mix_eq_f = pool.submit(_multiset_eq, inc["mixed"], twin["mixed"])
-        n_bins_f = pool.submit(
-            lambda: pb_read.select("shard", "bin_id")
-            .unionByName(pe1_read.select("shard", "bin_id"))
-            .distinct().count()
-        )
-        pack_eq, keep_eq, mix_eq, n_bins_total = (
-            pack_eq_f.result(), keep_eq_f.result(), mix_eq_f.result(),
-            n_bins_f.result(),
-        )
+    pack_eq, keep_eq, mix_eq, n_bins_total = concurrent_values(
+        lambda: _multiset_eq(served, tp),
+        lambda: _multiset_eq(
+            inc["keep"].select("doc_id"), twin["keep"].select("doc_id")
+        ),
+        lambda: _multiset_eq(inc["mixed"], twin["mixed"]),
+        lambda: pb_read.select("shard", "bin_id")
+        .unionByName(pe1_read.select("shard", "bin_id"))
+        .distinct().count(),
+        max_workers=4,
+    )
     equals_rebuild = pack_eq and keep_eq and mix_eq
 
     # ---- stage rows off the INCREMENTAL artifacts ---------------------

@@ -37,3 +37,27 @@ def test_first_failing_thunk_raises(spark):
 
     with pytest.raises(ValueError, match="first"):
         concurrent_values(lambda: 1, boom("first"), boom("second"))
+
+
+def test_release_incremental_submits_no_ungrouped_job(spark):
+    """Every job ``corpus_release_incremental`` runs, including the
+    overlapped artifact writes and equality checks, stays in the
+    caller's job group."""
+    from conftest import SF_DIR
+    from reports_generator_spark.plans import registry
+
+    registry.load_all()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    group = f"test-release-inc-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "corpus_release_incremental")
+    try:
+        df = registry.QUERIES["corpus_release_incremental"](spark, SF_DIR)
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup(group)
+    # the tracker keeps only the latest jobs, so old ids may drop out
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped_before

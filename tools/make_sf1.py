@@ -16,6 +16,9 @@ gains 9 identical twins, and every shingle's document frequency
 multiplies by 10, which exercises the shingle-df cap).
 
 Output: /root/repo/.scratch/sf1/*.parquet (gitignored, rebuildable).
+Usage:
+    python tools/make_sf1.py
+    python tools/probe.py --at <SRC dir>:32 --at .scratch/sf1:32 <keys...>
 """
 
 from __future__ import annotations

@@ -13,8 +13,7 @@ the adversarial dedup corpus, by construction).
 Output: /root/repo/.scratch/sf10/*.parquet (gitignored, rebuildable).
 Usage:
     python tools/make_sf10.py
-    SPARK_GRAFT_PROBE_BASE=.scratch/sf1 SPARK_GRAFT_PROBE_BIG=.scratch/sf10 \
-      python tools/probe_scale.py <keys...>
+    python tools/probe.py --at .scratch/sf1:32 --at .scratch/sf10:32 <keys...>
 """
 
 from __future__ import annotations

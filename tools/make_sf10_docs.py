@@ -14,9 +14,8 @@ loads still resolve.
 Output: /root/repo/.scratch/sf10docs/ (gitignored, rebuildable).
 Usage:
     python tools/make_sf10_docs.py
-    SPARK_GRAFT_PROBE_BASE=.scratch/sf1 \
-    SPARK_GRAFT_PROBE_BIG=.scratch/sf10docs \
-      python tools/probe_scale.py graph_bfs_reachability ...
+    python tools/probe.py --at .scratch/sf1:32 --at .scratch/sf10docs:32 \
+      graph_bfs_reachability ...
 """
 
 from __future__ import annotations

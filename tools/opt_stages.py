@@ -1,26 +1,20 @@
 #!/usr/bin/env python
-"""Stage-level breakdown for one registered key (round-14 optimization
-measurement): runs the key once with the Spark UI enabled and prints
-every job and its stages sorted by wall/executor time, so the expensive
-operator inside a multi-job protocol key is visible without guessing.
+"""Stage-level breakdown for registered keys: runs each key once,
+timed by `tools/harness.py` with the Spark UI on, and prints its jobs
+(found by the job group `time_key` gives them) with their stages, so
+the expensive operator inside a multi-job key is visible without
+guessing. Fixtures and cores come from the same variables as bench.py.
 
 Usage: python tools/opt_stages.py KEY [KEY ...]
 """
 
-from __future__ import annotations
-
 import json
 import os
 import sys
-import time
 import urllib.request
+from datetime import datetime
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from reports_generator_spark.plans import registry  # noqa: E402
-from reports_generator_spark.session import get_spark, tune  # noqa: E402
-
-registry.load_all()
+import harness
 
 
 def _get(url: str):
@@ -28,74 +22,38 @@ def _get(url: str):
         return json.load(r)
 
 
+def _when(timestamp: str) -> datetime:
+    return datetime.fromisoformat(timestamp.replace("GMT", "+00:00"))
+
+
 def main() -> None:
-    keys = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        "rg-spark-stageprof",
-        master=f"local[{cpus}]",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4049"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    registry.QUERIES["agg_hash_group"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.range(0, 128).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    api = "http://localhost:4049/api/v1"
-    app_id = spark.sparkContext.applicationId
-
-    for name in keys:
-        jobs_before = {j["jobId"] for j in _get(f"{api}/applications/{app_id}/jobs")}
-        t0 = time.perf_counter()
-        df = registry.QUERIES[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        tune(spark)
-        jobs = [
-            j
-            for j in _get(f"{api}/applications/{app_id}/jobs")
-            if j["jobId"] not in jobs_before
-        ]
-        stages = {
-            s["stageId"]: s
-            for s in _get(f"{api}/applications/{app_id}/stages?status=complete")
-        }
+    ui = {"spark.ui.enabled": "true"}
+    spark = harness.fresh_session("rg-spark-stageprof", sf_dir, cpus, extra_conf=ui)
+    sc = spark.sparkContext
+    # the UI binds the first free port from 4040 up; ask where it went
+    api = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
+    for name in sys.argv[1:]:
+        harness.settle(spark)
+        wall = harness.time_key(spark, sf_dir, name)
+        jobs = [j for j in _get(f"{api}/jobs") if j.get("jobGroup") == name]
+        stages = {s["stageId"]: s for s in _get(f"{api}/stages?status=complete")}
         print(f"\n===== {name}: wall {wall:.2f}s, {len(jobs)} jobs =====")
-        rows = []
         for j in sorted(jobs, key=lambda x: x["jobId"]):
-            dur = None
-            if j.get("completionTime") and j.get("submissionTime"):
-                from datetime import datetime
-
-                fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-                try:
-                    dur = (
-                        datetime.strptime(j["completionTime"], fmt)
-                        - datetime.strptime(j["submissionTime"], fmt)
-                    ).total_seconds()
-                except Exception:
-                    dur = None
-            sdesc = []
-            for sid in j.get("stageIds", []):
-                s = stages.get(sid)
-                if not s:
-                    continue
-                sdesc.append(
-                    f"      stage {sid}: {s['numCompleteTasks']}t "
-                    f"run={s['executorRunTime']/1000:.2f}s "
-                    f"cpu={s.get('executorCpuTime',0)/1e9:.2f}s "
-                    f"shR={s.get('shuffleReadBytes',0)>>10}KB "
-                    f"shW={s.get('shuffleWriteBytes',0)>>10}KB  {s['name'].split(chr(10))[0][:80]}"
+            end = j.get("completionTime", j["submissionTime"])
+            took = (_when(end) - _when(j["submissionTime"])).total_seconds()
+            print(f"  job {j['jobId']}: {took:.2f}s  {(j.get('description') or j['name'])[:100]}")
+            for s in filter(None, map(stages.get, j.get("stageIds", []))):
+                print(
+                    f"      stage {s['stageId']}: {s['numCompleteTasks']}t "
+                    f"run={s['executorRunTime'] / 1000:.2f}s "
+                    f"cpu={s.get('executorCpuTime', 0) / 1e9:.2f}s "
+                    f"shR={s.get('shuffleReadBytes', 0) >> 10}KB "
+                    f"shW={s.get('shuffleWriteBytes', 0) >> 10}KB  "
+                    f"{s['name'].splitlines()[0][:80]}"
                 )
-            rows.append((dur or 0.0, j["jobId"], j.get("description") or j["name"], sdesc))
-        for dur, jid, desc, sdesc in rows:
-            print(f"  job {jid}: {dur:.2f}s  {desc[:100]}")
-            for line in sdesc:
-                print(line)
+    spark.stop()
 
 
 if __name__ == "__main__":
