@@ -22,6 +22,14 @@ This rebuild:
   classification, real count-difference arithmetic — replacing the
   reference's placeholder literals ("cualquier cosa"/"Proof"/"Proof2",
   Proof.scala:250-253) while keeping column positions identical.
+- P13 key: RUTA_DE_REPORTE derives from the scan's file metadata
+  (`_metadata.file_path`, rewritten to the form `input_file_name()`
+  renders). That expression is deterministic, so the sink's
+  "not yet processed" filter is pushed into the text scan and a
+  landing reads only the files it has not processed (sinks.py). The
+  streaming micro-batch has no `_metadata` and keys on
+  input_file_name(), which renders the same; its frame lists no
+  files, so the sink keeps the left-anti join there.
 
 Known deviations from reference bugs (documented, intentional):
 - values containing ':' are kept whole (split limit 2); the reference
@@ -33,7 +41,7 @@ Known deviations from reference bugs (documented, intentional):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ReportConfig
@@ -124,112 +132,143 @@ ERP_FIELD_ORDER: tuple[str, ...] = (
 #: "regrex" TODO at Proof.scala:249)
 _FILE_DATE_RE = r"\[(\d{2}-\d{2}-\d{4}T\d{2}_\d{2}_\d{2})\]"
 
+#: the scanned file's URI as `input_file_name()` and `inputFiles()`
+#: render it. `_metadata.file_path` is URL-encoded the same way but
+#: drops the empty authority of an authority-less URI (`file:/x` where
+#: they give `file:///x`). Unlike input_file_name(), which is
+#: nondeterministic, a filter on this expression is pushed into the
+#: file scan and prunes the files it rejects.
+_FILE_URI_SQL = "regexp_replace(_metadata.file_path, '^([A-Za-z][A-Za-z0-9+.-]*):/(?!/)', '$1:///')"
+
+#: the completeness filter (P7): terminated, full-length blocks
+_COMPLETE_SQL = f"has_term = 1 AND size(vals) >= {BLOCK_LEN}"
+
+
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+_LINE_BREAK = sql_str(r"\r?\n")
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _decoded_key_sql(uri: str) -> str:
+    """SQL for RUTA_DE_REPORTE from a file-URI expression: the URI is
+    URL-encoded, so decode it and the stored path (and the
+    filename-date regex, whose brackets arrive as %5B/%5D otherwise)
+    see the real file name; a URI that does not decode is kept as is."""
+    return f"coalesce(try_url_decode({uri}), {uri})"
+
+
+def report_keys(spark: SparkSession, uris: list[str]) -> list[str]:
+    """RUTA_DE_REPORTE of each file URI, in the form `inputFiles()`
+    renders it, by the same expression the ingest stores. The VALUES
+    table is a local relation that the optimizer evaluates on the
+    driver, so no job runs."""
+    if not uris:
+        return []
+    rows = ", ".join(f"({sql_str(u)})" for u in uris)
+    query = f"SELECT {_decoded_key_sql('uri')} FROM VALUES {rows} AS t(uri)"
+    return [r[0] for r in spark.sql(query).collect()]
+
+
+def _lines(raw: DataFrame, uri_sql: str, text_sql: str) -> DataFrame:
+    return raw.selectExpr(
+        f"{uri_sql} AS report_path",
+        f"posexplode(split({text_sql}, {_LINE_BREAK})) AS (line_no, line)",
+    )
+
 
 def lines_from_wholetext(raw: DataFrame) -> DataFrame:
-    """(value=whole file text) → (report_path, line_no, line).
-
-    Shared by the batch and streaming ingest paths (foreachBatch hands
-    the streaming micro-batch to this same function)."""
-    return raw.select(
-        F.input_file_name().alias("report_path"),
-        F.posexplode(F.split(F.col("value"), r"\r?\n")).alias("line_no", "line"),
-    )
+    """(value=whole file text) → (report_path, line_no, line) for the
+    streaming micro-batch, which foreachBatch hands over without
+    `_metadata`; input_file_name() renders the same URI as the batch
+    reader's _FILE_URI_SQL, so both paths store the same key."""
+    return _lines(raw, "input_file_name()", "value")
 
 
 def read_report_lines(spark: SparkSession, cfg: ReportConfig) -> DataFrame:
     """S1+S2: one recursive scan of all report files → (report_path,
     line_no, line). Executor-side IO; no driver listing loop.
+    ``report_path`` comes from the scan's file metadata, so a filter on
+    the report key prunes files at the scan.
 
     The reference DECLARES a charset property but leaves it empty and
     unused (Proof.scala:26); completed here like ISU/idempotency: a
     non-UTF-8 charset routes through the binaryFile source + decode()
     (the text source is UTF-8-only), so legacy ISO-8859-1 report dumps
-    ingest losslessly. Same executor-side parallel scan either way."""
-    cs = (cfg.charset or "UTF-8").upper().replace("-", "").replace("_", "")
-    if cs != "UTF8":
-        raw = (
-            spark.read.format("binaryFile")
-            .option("recursiveFileLookup", "true")
-            .option("pathGlobFilter", f"*{cfg.ext_file}")
-            .load(cfg.input_dir)
-        )
-        return raw.select(
-            F.col("path").alias("report_path"),
-            F.posexplode(
-                F.split(F.decode(F.col("content"), cfg.charset), r"\r?\n")
-            ).alias("line_no", "line"),
-        )
-    raw = (
+    ingest losslessly. Same executor-side parallel scan and the same
+    report key either way."""
+    reader = (
         spark.read.option("recursiveFileLookup", "true")
         .option("pathGlobFilter", f"*{cfg.ext_file}")
-        # NOTE: must be the boolean kwarg — .option("wholetext","true")
-        # is silently ignored by the text source in Spark 4.x
-        .text(cfg.input_dir, wholetext=True)
     )
-    return lines_from_wholetext(raw)
+    cs = (cfg.charset or "UTF-8").upper().replace("-", "").replace("_", "")
+    if cs != "UTF8":
+        raw = reader.format("binaryFile").load(cfg.input_dir)
+        return _lines(raw, _FILE_URI_SQL, f"decode(content, {sql_str(cfg.charset)})")
+    # NOTE: must be the boolean kwarg — .option("wholetext","true") is
+    # silently ignored by the text source in Spark 4.x
+    raw = reader.text(cfg.input_dir, wholetext=True)
+    return _lines(raw, _FILE_URI_SQL, "value")
 
 
 def parse_blocks_raw(lines: DataFrame, cfg: ReportConfig) -> DataFrame:
     """P1-P6: key/value split, SI/NO normalization, cumulative-sum block
     ids, ordered block assembly — WITHOUT the completeness filter (P7),
     so the quarantine path can route rejects. Returns one row per block
-    with `vals`, `has_term`, and `any_parquet`."""
-    kv = lines.filter(F.col("line").contains(":")).select(
+    with `vals`, `has_term`, and `any_parquet`.
+
+    Built from SQL expression strings: the plan is the same as with
+    `F.*` column objects, at a fraction of the Py4J calls."""
+    def word(pattern: str) -> str:
+        return sql_str(rf"\b({pattern})\b")
+
+    kv = lines.where("contains(line, ':')").selectExpr(
         "report_path",
         "line_no",
-        F.trim(F.split(F.col("line"), ":", 2).getItem(0)).alias("key"),
-        F.trim(F.coalesce(F.split(F.col("line"), ":", 2).getItem(1), F.lit(""))).alias("value"),
+        "trim(split(line, ':', 2)[0]) AS key",
+        "trim(coalesce(split(line, ':', 2)[1], '')) AS value",
     )
-
-    # P4 — boolean -> localized SI/NO, keyed like Proof.scala:113-123
-    bool_key = rf"\b({cfg.boolean_caster_key})\b"
-    norm = kv.withColumn(
-        "value",
-        F.when(
-            F.col("key").rlike(bool_key),
-            F.when(F.col("value") == "true", "SI").otherwise("NO"),
-        ).otherwise(F.col("value")),
+    blocks = kv.selectExpr(
+        "report_path",
+        "line_no",
+        "key",
+        # P4 — boolean -> localized SI/NO, keyed like Proof.scala:113-123
+        f"CASE WHEN key RLIKE {word(cfg.boolean_caster_key)}"
+        " THEN CASE WHEN value = 'true' THEN 'SI' ELSE 'NO' END ELSE value END AS value",
+        f"CASE WHEN key RLIKE {word(cfg.limit_block_key)} THEN 1 ELSE 0 END AS is_term",
+    ).selectExpr(
+        "*",
+        # P2 — terminator-keyed block segmentation via exclusive cumsum
+        "coalesce(sum(is_term) OVER (PARTITION BY report_path ORDER BY line_no"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS block_id",
     )
-
-    # P2 — terminator-keyed block segmentation via exclusive cumsum
-    term_key = rf"\b({cfg.limit_block_key})\b"
-    is_term = F.when(F.col("key").rlike(term_key), 1).otherwise(0)
-    w = Window.partitionBy("report_path").orderBy("line_no")
-    blocks = norm.withColumn(
-        "block_id",
-        F.coalesce(
-            F.sum(is_term).over(w.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)
-        ),
-    ).withColumn("is_term", is_term)
 
     # ordered assembly: one aggregation, values sorted by line_no.
     # Zip-keyed lines (ISU extension) are extracted as named columns and
     # EXCLUDED from the positional array so ERP positions never shift.
-    is_zip = F.col("key").isin(*ZIP_KEYS)
-    assembled = blocks.groupBy("report_path", "block_id").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.when(~is_zip, F.struct("line_no", "value")))
-            ),
-            lambda s: s["value"],
-        ).alias("vals"),
-        F.max("is_term").alias("has_term"),
-        F.max(
-            F.when(F.col("value").rlike(rf"\b({cfg.report_type_match})\b"), 1).otherwise(0)
-        ).alias("any_parquet"),
-        *[
-            F.max(F.when(F.col("key") == k, F.col("value"))).alias(f"zip_{k}")
-            for k in ZIP_KEYS
-        ],
-    )
-    return assembled
+    zip_keys = ", ".join(map(sql_str, ZIP_KEYS))
+    aggs = [
+        "transform(array_sort(collect_list(CASE WHEN NOT key IN"
+        f" ({zip_keys}) THEN struct(line_no, value) END)), s -> s.value) AS vals",
+        "max(is_term) AS has_term",
+        f"max(CASE WHEN value RLIKE {word(cfg.report_type_match)} THEN 1 ELSE 0 END)"
+        " AS any_parquet",
+        *(f"max(CASE WHEN key = {sql_str(k)} THEN value END) AS zip_{k}" for k in ZIP_KEYS),
+    ]
+    return blocks.groupBy("report_path", "block_id").agg(*map(F.expr, aggs))
 
 
 def parse_blocks(lines: DataFrame, cfg: ReportConfig) -> DataFrame:
     """P1-P7: parse_blocks_raw + the completeness filter — only
     complete (terminated, full-length) blocks survive."""
-    assembled = parse_blocks_raw(lines, cfg)
-    return assembled.filter((F.col("has_term") == 1) & (F.size("vals") >= BLOCK_LEN))
+    return parse_blocks_raw(lines, cfg).where(_COMPLETE_SQL)
 
 
 def ingest_reports(spark: SparkSession, cfg: ReportConfig) -> DataFrame:
@@ -249,36 +288,29 @@ def project_blocks(blocks: DataFrame, cfg: ReportConfig) -> DataFrame:
     — shared by the plain ingest and the quarantine router, so both
     build on the SAME parsed-block plan."""
     # P6 — positional projection (1-based element_at; skip 9/10)
-    fields = {
-        name: F.element_at(F.col("vals"), pos) for pos, name in BLOCK_POSITIONS.items()
-    }
+    fields = {name: f"element_at(vals, {pos})" for pos, name in BLOCK_POSITIONS.items()}
 
     # P8 — enrichment, computed for real (cf. Proof.scala:236-274).
-    # input_file_name() returns a URL-encoded URI; decode it so the
-    # stored path (and the filename-date regex, whose brackets arrive
-    # as %5B/%5D otherwise) see the real file name.
-    decoded_path = F.coalesce(
-        F.expr("try_url_decode(report_path)"), F.col("report_path")
+    path = _decoded_key_sql("report_path")
+    fields["module"] = sql_str(cfg.module)
+    fields["reportType"] = (
+        f"CASE WHEN any_parquet = 1 THEN {sql_str(cfg.report_type_message)} ELSE '' END"
     )
-    fields["module"] = F.lit(cfg.module)
-    fields["reportType"] = F.when(
-        F.col("any_parquet") == 1, cfg.report_type_message
-    ).otherwise(F.lit(""))
-    fields["reportPath"] = decoded_path
-    fields["fileGeneratedDate"] = F.regexp_extract(decoded_path, _FILE_DATE_RE, 1)
+    fields["reportPath"] = path
+    fields["fileGeneratedDate"] = f"regexp_extract({path}, {sql_str(_FILE_DATE_RE)}, 1)"
 
-    def count_diff(prep: str, oficial: str):
+    def count_diff(prep: str, oficial: str) -> str:
         # try_cast: non-numeric/empty counts yield NULL -> "" instead of
         # failing the whole job under ANSI mode (per-record tolerance).
-        d = fields[prep].try_cast("bigint") - fields[oficial].try_cast("bigint")
-        return F.coalesce(d.cast("string"), F.lit(""))
+        d = f"try_cast({fields[prep]} AS BIGINT) - try_cast({fields[oficial]} AS BIGINT)"
+        return f"coalesce(CAST({d} AS STRING), '')"
 
     fields["difCountCol"] = count_diff("fileAntColForCountColumns", "fileColForCountColumns")
     fields["difCountRow"] = count_diff("fileAntColForCountRows", "fileColForCountRows")
     fields["generationDate"] = (
-        F.lit(cfg.generation_date)
+        sql_str(cfg.generation_date)
         if cfg.generation_date is not None
-        else F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss")
+        else "date_format(current_timestamp(), 'yyyy-MM-dd HH:mm:ss')"
     )
 
     # ISU (ISU.scala:3-37) = ERP row + the zip block after the date
@@ -290,15 +322,14 @@ def project_blocks(blocks: DataFrame, cfg: ReportConfig) -> DataFrame:
     if cfg.module == "ISU":
         field_order[4:4] = ZIP_KEYS
         for zf in ZIP_KEYS:
-            fields[zf] = F.coalesce(F.trim(F.col(f"zip_{zf}")), F.lit(""))
+            fields[zf] = f"coalesce(trim(zip_{zf}), '')"
     elif cfg.module == "MAIN":
         field_order = [name for _, name in sorted(BLOCK_POSITIONS.items())]
 
-    public = [
-        fields[logical].cast("string").alias(public_name)
+    out = blocks.selectExpr(*(
+        f"CAST({fields[logical]} AS STRING) AS {sql_ident(public_name)}"
         for logical, public_name in zip(field_order, cfg.headers, strict=True)
-    ]
-    out = blocks.select(*public)
+    ))
     # contract check: names/types match generate_schema(headers)
     # (nullability differs per-column: literals are non-nullable)
     expect = generate_schema(cfg.headers)
@@ -326,15 +357,12 @@ def ingest_with_quarantine(
     blocks = parse_blocks_raw(lines, cfg)
     if materialize:
         blocks = blocks.localCheckpoint()
-    good_pred = (F.col("has_term") == 1) & (F.size("vals") >= BLOCK_LEN)
-    good = project_blocks(blocks.filter(good_pred), cfg)
-    quarantined = blocks.filter(~good_pred).select(
+    good = project_blocks(blocks.where(_COMPLETE_SQL), cfg)
+    quarantined = blocks.where(f"NOT ({_COMPLETE_SQL})").selectExpr(
         "report_path",
         "block_id",
-        F.when(F.col("has_term") == 0, "no_terminator")
-        .otherwise("short_block")
-        .alias("reject_reason"),
-        F.size("vals").alias("n_values"),
-        F.col("vals").alias("raw_values"),
+        "CASE WHEN has_term = 0 THEN 'no_terminator' ELSE 'short_block' END AS reject_reason",
+        "size(vals) AS n_values",
+        "vals AS raw_values",
     )
     return good, quarantined

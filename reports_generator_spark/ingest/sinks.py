@@ -7,7 +7,12 @@ Reference behavior and its two defects we fix:
   single-file writes serialize at scale; here the default is a
   partitioned parallel write, single_file is an explicit export option.
 - The already-processed check was a stub (Proof.scala:225-234) → here
-  it is a left-anti join on RUTA_DE_REPORTE against the existing sink.
+  it is answered before the scan: a batch read of report files asks
+  the sink which of ITS OWN files are already landed and filters the
+  rest, a filter that prunes the processed files from the text scan.
+  A landing therefore costs what its unprocessed files cost, and a
+  rerun over an unchanged tree is one small lookup job that writes
+  nothing.
 
 A batch is parsed once for both sinks: `write_parquet_idempotent`
 materializes the rows it appends and returns that materialized frame,
@@ -18,12 +23,26 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .reports import report_keys, sql_ident, sql_str
+
 REPORT_PATH_COL = "RUTA_DE_REPORTE"
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "append") -> None:
-    """K1: header + quote-all CSV (Proof.scala:140-145 options)."""
+    """K1: header + quote-all CSV (Proof.scala:140-145 options).
+    Appending a frame whose plan proves it empty, like the one a no-op
+    `write_parquet_idempotent` returns, writes no file at all (Spark
+    would add a header-only part)."""
+    if mode == "append" and _provably_empty(df):
+        return
     df.write.mode(mode).option("header", True).option("quoteAll", True).csv(path)
+
+
+def _provably_empty(df: DataFrame) -> bool:
+    """The optimized plan has at most 0 rows; decided on the driver,
+    without a job."""
+    max_rows = df._jdf.queryExecution().optimizedPlan().maxRows()
+    return max_rows.isDefined() and max_rows.get() == 0
 
 
 def dataset_exists(spark: SparkSession, path: str) -> bool:
@@ -38,6 +57,65 @@ def dataset_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
+def _sink_keys(spark: SparkSession, path: str, key_col: str) -> DataFrame:
+    """The sink's key column, read with its known schema (no schema
+    inference job). A file without the column reads as nulls, and a
+    stored key is never null, so a null key fails the job instead of
+    matching nothing; a non-string column fails the read."""
+    key = sql_ident(key_col)
+    missing = sql_str(f"sink {path} has no string {key_col} column")
+    return spark.read.schema(f"{key} STRING").parquet(path).selectExpr(
+        f"coalesce({key}, raise_error({missing})) AS {key}"
+    )
+
+
+def pending_rows(
+    spark: SparkSession, df: DataFrame, path: str, key_col: str = REPORT_PATH_COL
+) -> DataFrame | None:
+    """The rows of ``df`` whose key is not yet in the existing parquet
+    sink at ``path``, as a lazy frame; None when every file of ``df`` is
+    already processed, which is known before any scan.
+
+    A batch read of report files (``df.inputFiles()`` non-empty; its
+    ``key_col`` must be the report key `ingest_reports` builds) is
+    decided per file: the files' keys, decoded on the driver by the
+    ingest's own expression, are looked up in the sink's key column in
+    one job, so the lookup is bounded by the landing tree, not by the
+    sink's history. If all of them are processed the answer is None;
+    otherwise ``NOT key IN processed`` is pushed into the text scan and
+    the processed files are never read or parsed. A file that yields no
+    complete record never reaches the sink, so it keeps a rerun from
+    being a no-op (it parses to 0 rows).
+
+    A streaming micro-batch has no file listing (``inputFiles()`` is
+    empty) and no ``_metadata``, so it keeps the left-anti join against
+    the sink's keys. The join carries no broadcast hint: the key
+    history is unbounded over years of appends, and AQE picks broadcast
+    while it is small and shuffles when it is not.
+    """
+    key = sql_ident(key_col)
+    uris = df.inputFiles()
+    if not uris:
+        existing = _sink_keys(spark, path, key_col).distinct()
+        # the join moves key_col to the front; keep df's order so every
+        # appended CSV file has the first batch's header
+        return df.join(existing, key_col, "left_anti").select(*df.columns)
+    keys = report_keys(spark, uris)
+    candidates = ", ".join(map(sql_str, sorted(set(keys))))
+    done = {
+        r[0]
+        for r in _sink_keys(spark, path, key_col)
+        .where(f"{key} IN ({candidates})")
+        .collect()
+    }
+    if done.issuperset(keys):
+        return None
+    if not done:
+        return df
+    processed = ", ".join(map(sql_str, sorted(done)))
+    return df.where(f"NOT {key} IN ({processed})")
+
+
 def write_parquet_idempotent(
     spark: SparkSession,
     df: DataFrame,
@@ -45,18 +123,18 @@ def write_parquet_idempotent(
     key_col: str = REPORT_PATH_COL,
     single_file: bool = False,
 ) -> DataFrame:
-    """K2+P13: append only not-yet-processed report rows to parquet.
+    """K2+P13: append only not-yet-processed report rows to parquet
+    (see `pending_rows` for how they are found).
 
     First write creates the dataset (the reference's overwrite-first
     probe, Proof.scala:51-53, without the mutable driver flag). Returns
     the materialized rows actually written, in ``df``'s column order;
     pass them to `write_csv` so both sinks get the same rows from one
-    scan and parse of the input.
+    scan and parse of the input. When ``df``'s files are all processed
+    nothing is scanned, materialized or written, and the returned frame
+    is provably empty, so `write_csv` writes nothing either.
 
-    Scale notes: the processed-key history is unbounded over years of
-    appends, so the anti-join carries NO broadcast hint (AQE picks
-    broadcast while it is small, shuffles when it is not). The rows to
-    append are the one materialization point: one eager
+    The rows to append are the one materialization point: one eager
     ``localCheckpoint`` of ``fresh`` BEFORE the append, so the write
     never scans the directory it is appending to, and later writers of
     the returned frame neither re-read the input nor see files that
@@ -67,14 +145,13 @@ def write_parquet_idempotent(
     blocks live in executor memory spilling to disk (MEMORY_AND_DISK)
     and Spark's context cleaner frees them once the returned frame is
     no longer referenced. Any read error other than true absence
-    (schema mismatch, corrupt footer) propagates instead of silently
-    switching to overwrite.
+    (schema mismatch, corrupt footer, a missing key column) propagates
+    instead of silently switching to overwrite.
     """
     if dataset_exists(spark, path):
-        existing = spark.read.parquet(path).select(key_col).distinct()
-        # the join moves key_col to the front; keep df's order so every
-        # appended CSV file has the first batch's header
-        fresh = df.join(existing, key_col, "left_anti").select(*df.columns)
+        fresh = pending_rows(spark, df, path, key_col)
+        if fresh is None:
+            return df.limit(0)
         mode = "append"
     else:
         fresh = df
